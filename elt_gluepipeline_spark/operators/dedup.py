@@ -154,11 +154,12 @@ def blocked_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         # q196) skips the persist. The disk-backed materialization
         # feeding an eager localCheckpoint loop is doubly exposed to
         # slow-disk host phases (the driver's q172 8.9 s event);
-        # interleaved same-session A/B (tools/r12_ab.py q172, two
-        # sessions): no-persist median 2.42/2.46 s vs MEMORY_AND_DISK
-        # 2.92/2.69 s with a 3.9-11.3 s slow tail the no-persist
-        # variant never shows. Flat consumers (q18 itself) keep the
-        # persist — its round-11 win (1.32→0.86 s) was re-verified.
+        # interleaved same-session A/B (VERDICT r12 audit #1, plans in
+        # plans/r12/q172_pairs_*.txt; two sessions): no-persist median
+        # 2.42/2.46 s vs MEMORY_AND_DISK 2.92/2.69 s with a 3.9-11.3 s
+        # slow tail the no-persist variant never shows. Flat consumers
+        # (q18 itself) keep the persist — its round-11 win
+        # (1.32→0.86 s) was re-verified.
         base = shingle_base(df, id_col, text_col, block_cols, k=k)
         if persist_base:
             base = register_cache(base)
@@ -446,7 +447,7 @@ def fit_lsh_dedup_index(corpus: DataFrame, id_col: str, text_col: str, *,
 
 ENTRIES_PBUCKET = "_pbucket"
 
-# Measured crossover (SCALE_r11, tools/lsh_serve_crossover.py): the flat
+# Measured crossover (SCALE_r11.json "lsh_serve_crossover"): the flat
 # entries scan already loses to the partitioned probe at 2e7 entries
 # rows (6.4 s vs 2.9 s per trickle batch) and by 14.6x at 4e8; below
 # the crossover the layout's fixed overhead (~0.8 s at toy scale,

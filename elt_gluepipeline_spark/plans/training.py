@@ -177,7 +177,7 @@ def _q18_pairs(spark: SparkSession, sf_dir: str, *,
     connected-components eager-checkpoint loop (q56/q59/q149/q172/
     q196): the internal MEMORY_AND_DISK shingle-base persist measured
     SLOWER and slow-tailed under that consumer (round-12 interleaved
-    A/B, tools/r12_ab.py q172 — VERDICT r11 item #1), while flat
+    A/B, VERDICT r12 audit #1 — VERDICT r11 item #1), while flat
     consumers (q18 itself) keep its round-11 win."""
     docs = read_table(spark, sf_dir, "documents")
     blocks = [F.col("lang"),
@@ -6014,7 +6014,7 @@ def q171_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before-plan carried the full prefix-filter AND LSH pipelines ~2x
     # each (326 nodes, 132 Exchange — plans/r12/q171_*_before.txt) and
     # AQE did NOT reuse them across branches. Interleaved A/B
-    # (tools/r12_ab.py q171): persisted median 4.94 s vs 7.83 s,
+    # (VERDICT r12 audit #3): persisted median 4.94 s vs 7.83 s,
     # won 4/5 paired rounds. Two-long-column frames, bounded by the
     # true/candidate pair count; released by every harness.
     base = shingle_base_cached(docs, "doc_id", "text", k=3)

@@ -64,18 +64,13 @@ Idempotence: keep-latest is a join-semilattice fold (max by
 reproduces the same winners — a replayed micro-batch after a crash
 rewrites the same bucket contents. This REQUIRES a deterministic
 total order: pass unique tiebreakers when the ordering columns can
-collide. The merge consumes the batch twice (touched-bucket collect,
-staging write); by default (``persist_batch="auto"``) it
-localCheckpoints the batch first so the plan is EVALUATED ONCE —
-expensive upstream plans aren't recomputed and even a
-nondeterministic batch (limit without order, rand()) merges the rows
-it materialized — UNLESS the batch is a deterministic
-projection/filter/scan chain, where the eager materialization is
-pure added cost (round-12 measurement) and re-reading the source is
-safe. With ``persist_batch=False`` the two consumers re-evaluate the
-plan, and the merge verifies the staged partition set is a subset of
-the touched set, failing loudly rather than silently dropping rows
-if the batch changed between evaluations.
+collide.
+
+Evaluate-once: the merge consumes the batch twice (touched-bucket
+collect, staging write), so it always localCheckpoints the batch
+first. Whatever the source — in-memory frame, range, parquet scan, an
+expensive join/agg, a nondeterministic plan — both consumers read the
+same materialized rows and the upstream plan runs exactly once.
 """
 
 from __future__ import annotations
@@ -248,39 +243,6 @@ def _staged_tombstone_counts(spark: SparkSession, staging: str,
     return {int(r[0]): int(r[1]) for r in rows}
 
 
-def _is_cheap_deterministic_scan(df: DataFrame) -> bool:
-    """True iff the analyzed plan is a DETERMINISTIC chain of
-    projections/filters over a relation — the only batch shape where
-    re-evaluating it twice (touched-bucket collect + staging write) is
-    both safe and cheaper than an eager localCheckpoint. Anything
-    else — aggregates, joins, windows, limits, samples, any
-    nondeterministic expression (rand(), wall-clock UDFs) — returns
-    False and keeps the checkpoint. Walks the logical plan, so it
-    never runs a job (the ensure_min_partitions lazy-contract
-    discipline); any introspection failure returns False, i.e. falls
-    back to the always-checkpoint behavior."""
-    cheap_nodes = ("Project", "Filter", "SubqueryAlias", "Relation",
-                   "LocalRelation", "LogicalRDD", "View")
-    try:
-        stack = [df._jdf.queryExecution().analyzed()]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            if not any(name == c or name.startswith(c)
-                       for c in cheap_nodes):
-                return False
-            exprs = node.expressions()
-            for i in range(exprs.size()):
-                if not exprs.apply(i).deterministic():
-                    return False
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        return True
-    except Exception:
-        return False
-
-
 def bucketed_merge(
     batch: DataFrame,
     *,
@@ -291,7 +253,6 @@ def bucketed_merge(
     tiebreak: Sequence[Column] = (),
     op_col: str | None = None,
     delete_op: str = "D",
-    persist_batch: bool | str = "auto",
 ) -> list[int]:
     """Apply one change batch to the bucketed snapshot. Returns the
     sorted list of bucket ids this merge rewrote (≤ n_buckets ints).
@@ -305,36 +266,17 @@ def bucketed_merge(
     sidecar, later merges maintain it automatically (the op column is
     recorded in it) and a conflicting ``op_col`` raises.
 
-    ``persist_batch=True`` localCheckpoints the batch so it is
-    EVALUATED ONCE: the merge consumes it twice (touched-bucket
-    collect + staging write), which for an expensive upstream plan
-    would double real work and for a nondeterministic one (rand(),
-    bare limit) would change rows between the two passes. The
-    checkpoint makes both consumers read the same materialized rows
-    (a lost block fails the job rather than silently recomputing).
-    With False the two consumers re-evaluate the plan; the
-    staged-⊆-touched guard below still fails loudly if such a batch
-    turns out nondeterministic.
-
-    The default ``"auto"`` (round-12, VERDICT r11 item #2) checkpoints
-    UNLESS the batch is a deterministic projection/filter/scan chain
-    (``_is_cheap_deterministic_scan``): for such trickle batches the
-    eager materialization is pure added cost (measured ~2-4% per merge
-    on the q201 shape, checkpoint slower in 5/6 interleaved rounds —
-    tools/r12_ab.py q201), while expensive shuffle/agg-fed batches
-    keep the SCALE_r11-measured 1.44x win and nondeterministic ones
-    keep the evaluate-once safety."""
+    The batch is localCheckpointed first, so its plan is EVALUATED
+    ONCE (see module docstring); a lost block fails the job rather
+    than silently recomputing."""
     spark = batch.sparkSession
     live = _live_dir(snapshot_dir)
     os.makedirs(snapshot_dir, exist_ok=True)
     _recover_asides(snapshot_dir)
     op_col, delete_op = _resolve_op_col(snapshot_dir, op_col, delete_op)
 
-    b = batch.withColumn(BUCKET_COL, bucket_of(primary_keys, n_buckets))
-    if persist_batch == "auto":
-        persist_batch = not _is_cheap_deterministic_scan(batch)
-    if persist_batch:
-        b = b.localCheckpoint(eager=True)
+    b = (batch.withColumn(BUCKET_COL, bucket_of(primary_keys, n_buckets))
+         .localCheckpoint(eager=True))
     touched = sorted(
         r[0] for r in b.select(BUCKET_COL).distinct().collect())
     if not touched:
@@ -362,12 +304,11 @@ def bucketed_merge(
            .write.mode("overwrite").partitionBy(BUCKET_COL)
            .parquet(staging))
 
-    # With persist_batch=False the batch plan was evaluated twice
-    # (touched-bucket collect, staging write): a nondeterministic batch
-    # can stage buckets whose prev rows were never merged. Fail loudly
-    # instead of dropping them. (Under the default localCheckpoint this
-    # is a no-cost invariant check — both consumers read the same
-    # materialized rows.)
+    # Invariant guaranteed by the checkpoint above: both consumers read
+    # the same materialized rows, so staging can only write touched
+    # buckets. Were the batch ever re-evaluated, a nondeterministic
+    # plan could stage buckets whose prev rows were never merged —
+    # fail loudly rather than drop them.
     staged = {int(d.split("=", 1)[1]) for d in os.listdir(staging)
               if d.startswith(f"{BUCKET_COL}=")}
     extra = staged - set(touched)

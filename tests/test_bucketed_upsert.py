@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from elt_gluepipeline_spark.streaming.bucketed_upsert import (
@@ -231,24 +232,26 @@ def _wallclock_batch(spark):
             .selectExpr("k", "id as seq", "'x' as v", "'U' as op"))
 
 
-def test_nondeterministic_batch_fails_loudly_unpersisted(spark, tmp_path):
-    # With persist_batch=False the plan is evaluated twice; a batch
+def test_nondeterministic_batch_fails_loudly_unpersisted(spark, tmp_path,
+                                                        monkeypatch):
+    # With the checkpoint disabled the plan is evaluated twice; a batch
     # whose rows change between evaluations can stage buckets outside
-    # the touched set — the merge must raise, not drop rows (ADVICE
-    # r9).
-    import pytest
-
+    # the touched set — the staged-within-touched guard must raise, not
+    # drop rows (ADVICE r9). Patch the session's concrete DataFrame
+    # class: it overrides the pyspark.sql.DataFrame base method.
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint",
+                        lambda self, eager=True: self)
     snap = str(tmp_path / "snap")
     with pytest.raises(ValueError, match="nondeterministic"):
         bucketed_merge(_wallclock_batch(spark), snapshot_dir=snap,
                        primary_keys=["k"], order_by=[F.col("seq").desc()],
-                       n_buckets=65536, persist_batch=False)
+                       n_buckets=65536)
     # and the failed merge left no live table behind
     assert read_bucketed_snapshot(spark, snap) is None
 
 
 def test_nondeterministic_batch_succeeds_by_default(spark, tmp_path):
-    # Default persist_batch=True localCheckpoints the batch, so both
+    # The merge always localCheckpoints the batch, so both
     # consumers read the SAME materialized rows: the formerly
     # operational error is now a successful merge of exactly the rows
     # the batch produced (VERDICT r10 #6).
@@ -261,11 +264,12 @@ def test_nondeterministic_batch_succeeds_by_default(spark, tmp_path):
     assert read_bucketed_snapshot(spark, snap).count() == 3
 
 
-def test_persist_batch_evaluates_plan_once(spark, tmp_path):
+@pytest.mark.parametrize("source", ["range", "in_memory", "parquet"])
+def test_merge_evaluates_batch_once(spark, tmp_path, source):
     # Side-effect instrumentation: an accumulator-bumping UDF in the
-    # batch plan must fire once per row under the default
-    # localCheckpoint (it fired 2x per row when the merge's two
-    # consumers each re-evaluated the plan).
+    # batch plan must fire once per row whatever the batch's source
+    # (it fired 2x per row when the merge's two consumers each
+    # re-evaluated the plan).
     from pyspark.sql.functions import udf
 
     snap = str(tmp_path / "snap")
@@ -276,6 +280,12 @@ def test_persist_batch_evaluates_plan_once(spark, tmp_path):
         return int(i)
 
     rows = spark.range(7).selectExpr("id as k", "id as seq")
+    if source == "in_memory":
+        rows = spark.createDataFrame([(i, i) for i in range(7)],
+                                     "k long, seq long")
+    elif source == "parquet":
+        rows.write.parquet(str(tmp_path / "src"))
+        rows = spark.read.parquet(str(tmp_path / "src"))
     batch = (rows.withColumn("k", udf(bump, "long")("k"))
                  .selectExpr("k", "seq", "'x' as v", "'U' as op"))
     bucketed_merge(batch, snapshot_dir=snap, primary_keys=["k"],
@@ -529,28 +539,3 @@ def test_maintain_bucket_layout(spark, tmp_path):
         spark, snap, primary_keys=["k"], current_n_buckets=new_b,
         target_mb_per_bucket=_du(snap) / new_b / (1024 * 1024),
         op_col="op") is None
-
-
-def test_persist_batch_auto_gate(spark):
-    """Round-12 pin (VERDICT r11 item #2): persist_batch="auto"
-    checkpoints expensive/nondeterministic batches but skips the eager
-    materialization for deterministic projection/filter/scan chains."""
-    from elt_gluepipeline_spark.streaming.bucketed_upsert import (
-        _is_cheap_deterministic_scan)
-
-    base = spark.createDataFrame(
-        [(1, 10, "a", "U"), (2, 20, "b", "U")], SCHEMA)
-    # plain scan / projection / filter: cheap & deterministic -> skip
-    assert _is_cheap_deterministic_scan(base)
-    assert _is_cheap_deterministic_scan(
-        base.filter(F.col("seq") % 3 == 1).select("k", "seq", "v", "op"))
-    # aggregate, join, limit: keep the checkpoint
-    assert not _is_cheap_deterministic_scan(
-        base.groupBy("k").agg(F.max("seq").alias("seq")))
-    assert not _is_cheap_deterministic_scan(
-        base.join(base.select("k"), "k"))
-    assert not _is_cheap_deterministic_scan(base.limit(1))
-    # nondeterministic expression: keep the checkpoint
-    assert not _is_cheap_deterministic_scan(
-        base.withColumn("r", F.rand(7)))
-    assert not _is_cheap_deterministic_scan(_wallclock_batch(spark))
